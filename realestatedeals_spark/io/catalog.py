@@ -36,12 +36,17 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import re
 import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
 from realestatedeals_spark.io.maintenance import CommitConflict, VersionedTable
+
+
+class CompactionError(RuntimeError):
+    """A compaction left one of the delta tables it folded still pinned."""
 
 
 class Catalog:
@@ -103,6 +108,14 @@ class Catalog:
         if v is None:
             return {}
         return {k: int(x) for k, x in self._manifest(v, branch)["pins"].items()}
+
+    def require_retired(self, delta: re.Pattern[str]) -> None:
+        """Raise ``CompactionError`` if a table whose name fully matches
+        ``delta`` is still pinned: a compaction must retire every delta it
+        folded, or a reader of base + deltas counts those rows twice."""
+        left = sorted(n for n in self.pins() if delta.fullmatch(n))
+        if left:
+            raise CompactionError(f"compaction left delta tables pinned: {left}")
 
     def applied_epoch(self, branch: str = "main") -> int | None:
         """Epoch id recorded by the newest manifest (exactly-once streaming:

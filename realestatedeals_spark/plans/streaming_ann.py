@@ -31,8 +31,6 @@ from __future__ import annotations
 
 import os
 import re
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,7 +46,7 @@ from realestatedeals_spark.plans.llm_vectors import (
 )
 from realestatedeals_spark.plans.registry import register
 from realestatedeals_spark.session import apply_session_conf
-from realestatedeals_spark.streaming.replay import write_epoch_dirs
+from realestatedeals_spark.streaming.replay import run_replay
 
 _ANN_DELTA_RE = re.compile(r"ann_d\d+")
 
@@ -122,41 +120,24 @@ def c19_stream_ann_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _micros_vectors(spark, sf_dir)
     assigned, cents = _kmeans_micros(emb)
 
-    work = tempfile.mkdtemp(prefix="stream_ann_")
-    try:
+    def write(stream, work):
         idx_path = os.path.join(work, "cells")
         assigned.select("vec_id", "v", "cluster").write.partitionBy(
             "cluster"
         ).parquet(idx_path)
-
-        # qids are multiples of 100 below 10000: pmod(qid, 300) splits the
-        # query set into exactly three batches (0, 100, 200)
-        queries = _ivf_queries(emb)
-        in_dir = os.path.join(work, "in")
-        os.makedirs(in_dir)
-        write_epoch_dirs(
-            in_dir,
-            [queries.filter(F.pmod(F.col("qid"), 300) == 100 * i) for i in (0, 1, 2)],
-        )
-
         cat = Catalog(spark, os.path.join(work, "cat"))
-        stream = (
-            spark.readStream.schema("qid bigint, qv array<bigint>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir + "/*")
+        return stream.writeStream.foreachBatch(
+            lambda bdf, eid: apply_ann_probe_batch(cat, bdf, eid, idx_path, cents)
         )
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda bdf, eid: apply_ann_probe_batch(cat, bdf, eid, idx_path, cents)
-            )
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+
+    def read(work):
+        cat = Catalog(spark, os.path.join(work, "cat"))
         compact_ann(cat)
-        assert not [n for n in cat.pins() if _ANN_DELTA_RE.fullmatch(n)]
-        out = cat.read("ann")
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        cat.require_retired(_ANN_DELTA_RE)
+        return cat.read("ann")
+
+    # qids are multiples of 100 below 10000: pmod(qid, 300) splits the
+    # query set into exactly three batches (0, 100, 200)
+    queries = _ivf_queries(emb)
+    batches = [queries.filter(F.pmod(F.col("qid"), 300) == 100 * i) for i in (0, 1, 2)]
+    return run_replay(spark, [batches], write, read)

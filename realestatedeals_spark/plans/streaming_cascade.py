@@ -24,8 +24,6 @@ hash match proves streaming cascade == batch semantics exactly.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,7 +31,7 @@ from pyspark.sql import functions as F
 from realestatedeals_spark.io.sources import load_events
 from realestatedeals_spark.plans.registry import register
 from realestatedeals_spark.session import apply_session_conf
-from realestatedeals_spark.streaming.replay import time_tiles, write_epoch_dirs
+from realestatedeals_spark.streaming.replay import run_replay, time_tiles
 
 _C11_ORACLE = """
 WITH q AS (
@@ -59,39 +57,23 @@ GROUP BY 1, 2
     tags=("C11", "streaming", "window", "cascade"),
 )
 def c11_cascade_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     apply_session_conf(spark)
     ev = load_events(spark, sf_dir).select("event_id", "ts", "event_type")
     tiles = time_tiles(ev, 3)  # exact ntile membership, no unpartitioned window
     bounds = ev.agg(F.max("ts").alias("mx")).first()
 
-    work = tempfile.mkdtemp(prefix="cascade_stream_")
-    try:
-        in_dir = os.path.join(work, "in")
-        os.makedirs(in_dir)
-        write_epoch_dirs(
-            in_dir,
-            tiles,
-            start=1,
-        )
-        # sentinel 3 h past the max event: watermark sails past the last
-        # real hour window in both stateful operators
-        sentinel = spark.createDataFrame(
-            [(-1, bounds["mx"], "__sentinel__")],
-            "event_id bigint, ts timestamp, event_type string",
-        ).select(
-            "event_id",
-            (F.col("ts") + F.expr("interval 3 hours")).alias("ts"),
-            "event_type",
-        )
-        write_epoch_dirs(in_dir, [sentinel], start=4)
+    # sentinel, replayed last, 3 h past the max event: the watermark sails
+    # past the last real hour window in both stateful operators
+    sentinel = spark.createDataFrame(
+        [(-1, bounds["mx"], "__sentinel__")],
+        "event_id bigint, ts timestamp, event_type string",
+    ).select(
+        "event_id",
+        (F.col("ts") + F.expr("interval 3 hours")).alias("ts"),
+        "event_type",
+    )
 
-        stream = (
-            spark.readStream.schema("event_id bigint, ts timestamp, event_type string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir + "/*")
-        )
+    def write(stream, work):
         quarters = (
             stream.withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "15 minutes").alias("w"), "event_type")
@@ -106,25 +88,20 @@ def c11_cascade_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n").alias("total_events"),
             F.max("n").alias("max_quarter"),
         )
-        out_dir = os.path.join(work, "out")
-        q = (
+        return (
             hourly.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
+            .option("path", os.path.join(work, "out"))
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
 
-        emitted = spark.read.parquet(out_dir)
-        result = emitted.filter(F.col("event_type") != "__sentinel__").select(
+    def read(work):
+        emitted = spark.read.parquet(os.path.join(work, "out"))
+        return emitted.filter(F.col("event_type") != "__sentinel__").select(
             F.date_format("h.start", "yyyy-MM-dd HH:mm:ss").alias("hour_start"),
             "event_type",
             "n_quarters",
             "total_events",
             "max_quarter",
         )
-        return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return run_replay(spark, [tiles + [sentinel]], write, read)

@@ -20,8 +20,6 @@ protocol is identical either way.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,7 +28,7 @@ from realestatedeals_spark.io.catalog import Catalog
 from realestatedeals_spark.io.sources import load_events
 from realestatedeals_spark.plans.registry import register
 from realestatedeals_spark.session import apply_session_conf
-from realestatedeals_spark.streaming.replay import time_tiles, write_epoch_dirs
+from realestatedeals_spark.streaming.replay import run_replay, time_tiles
 
 _C14_ORACLE = """
 SELECT event_type,
@@ -81,45 +79,17 @@ def c14_stream_catalog_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     view atomically with its epoch recorded; the final catalog-pinned view
     must equal the all-data batch aggregate (the oracle). Redelivery
     idempotency is pinned in tests/test_catalog.py."""
-    from pyspark.sql import Window as W
-
     apply_session_conf(spark)
     ev = load_events(spark, sf_dir).select("event_id", "ts", "user_id", "event_type", "value")
     tiles = time_tiles(ev, 3)  # exact ntile membership, no unpartitioned window
 
-    work = tempfile.mkdtemp(prefix="stream_catalog_")
-    try:
-        in_dir = os.path.join(work, "in")
-        os.makedirs(in_dir)
-        write_epoch_dirs(
-            in_dir,
-            [t.drop("ts") for t in tiles],
-            start=1,
+    def write(stream, work):
+        cat = Catalog(spark, os.path.join(work, "cat"))
+        return stream.writeStream.foreachBatch(lambda bdf, eid: apply_batch(cat, bdf, eid))
+
+    def read(work):
+        return Catalog(spark, os.path.join(work, "cat")).read("agg_view").select(
+            "event_type", "n_events", "n_users", "value_micros"
         )
 
-        cat = Catalog(spark, os.path.join(work, "cat"))
-        stream = (
-            spark.readStream.schema(
-                "event_id bigint, user_id bigint, event_type string, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir + "/*")
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda bdf, eid: apply_batch(cat, bdf, eid)
-            )
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = cat.read("agg_view").select(
-            "event_type",
-            "n_events",
-            "n_users",
-            "value_micros",
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return run_replay(spark, [[t.drop("ts") for t in tiles]], write, read)

@@ -2,12 +2,12 @@
 
 The reference's poll loop (main.py:107-142) re-expressed as Structured
 Streaming was previously exercised only by pytest; this registers a full
-availableNow run — three scrape cycles replayed as three micro-batches
-through ``start_cdc_stream`` (file source → foreachBatch CDC → swap-on-write
-state), INCLUDING a checkpoint-recovery restart: the first stream drains
-cycles 1-2 and terminates; cycle 3 is then dropped into the input directory
-and a second stream starts from the same checkpoint, proving it resumes with
-the carried state instead of reprocessing from scratch.
+replay run — three scrape cycles replayed as three micro-batches
+through ``run_replay`` (file source → foreachBatch CDC → swap-on-write
+state), INCLUDING a checkpoint-recovery restart: cycles 1-2 are one phase,
+drained by a first start that terminates; cycle 3 is a second phase, drained
+by a second start from the same checkpoint, proving it resumes with the
+carried state instead of reprocessing from scratch.
 
 The accumulated emissions are fully deterministic (each cycle is a modular
 filter over ``orders`` with mirrored price expressions), so the whole
@@ -19,8 +19,6 @@ next-round item 7).
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,8 +26,8 @@ from pyspark.sql import functions as F
 from realestatedeals_spark.io.sources import load_table
 from realestatedeals_spark.plans.registry import register
 from realestatedeals_spark.session import apply_session_conf
-from realestatedeals_spark.streaming.cdc_stream import start_cdc_stream
-from realestatedeals_spark.streaming.replay import epoch_dir_name, write_epoch_dirs
+from realestatedeals_spark.streaming.cdc_stream import CdcState, process_cdc_batch
+from realestatedeals_spark.streaming.replay import run_replay
 
 # Three deterministic scrape cycles over orders. Price expressions are
 # mirrored verbatim in the oracle so the doubles match bit-for-bit.
@@ -82,40 +80,20 @@ def c3_streaming_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay 3 scrape cycles through the real streaming query, restarting
     from the checkpoint before the last cycle; return all emissions."""
     apply_session_conf(spark)
-    work = tempfile.mkdtemp(prefix="cdc_stream_bench_")
-    try:
-        in_dir = os.path.join(work, "in")
-        os.makedirs(in_dir)
-        cycles = _cycles(spark, sf_dir)
-        # one file per cycle, mtime-ordered, so maxFilesPerTrigger=1 replays
-        # each cycle as its own micro-batch in order
-        write_epoch_dirs(in_dir, cycles)
 
-        kwargs = dict(
-            schema="mls bigint, price double",
-            state_dir=os.path.join(work, "state"),
-            emit_dir=os.path.join(work, "emit"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-            max_files_per_trigger=1,
+    def write(stream, work):
+        state = CdcState(spark, os.path.join(work, "state"))
+        emit_dir = os.path.join(work, "emit")
+        return stream.writeStream.foreachBatch(
+            lambda bdf, eid: process_cdc_batch(bdf, state, emit_dir, epoch_id=eid)
         )
-        # phase 1: only cycles 1-2 exist yet — drain and terminate (the
-        # held name is DERIVED from the batch index, pinned to
-        # write_epoch_dirs' naming via epoch_dir_name)
-        last = epoch_dir_name(len(cycles) - 1)
-        shutil.move(os.path.join(in_dir, last), os.path.join(work, "held"))
-        q = start_cdc_stream(spark, in_dir + "/*", **kwargs)
-        q.awaitTermination()
-        # phase 2: cycle 3 arrives; restart from the SAME checkpoint — the
-        # resumed stream must process exactly the one new file against the
-        # state the first run left behind
-        shutil.move(os.path.join(work, "held"), os.path.join(in_dir, last))
-        q = start_cdc_stream(spark, in_dir + "/*", **kwargs)
-        q.awaitTermination()
 
-        out = spark.read.parquet(kwargs["emit_dir"]).select(
+    def read(work):
+        return spark.read.parquet(os.path.join(work, "emit")).select(
             "mls", "status", "old_price", "new_price", "price_change_percentage"
         )
-        # pin results before the tmp dir vanishes
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    cycles = _cycles(spark, sf_dir)
+    # phase 2 holds cycle 3 back: the restarted stream must process exactly
+    # that one new batch against the state the first start left behind
+    return run_replay(spark, [cycles[:2], cycles[2:]], write, read)

@@ -1,7 +1,7 @@
 """Streaming exact dedup end-to-end as a registered, oracle-checked query.
 
 ``stream_dedup`` (streaming/windows.py — ``dropDuplicatesWithinWatermark``)
-was previously exercised only by pytest; this registers a full availableNow
+was previously exercised only by pytest; this registers a full replay
 run: the events fixture is replayed as three time-ordered micro-batches with
 deterministically injected duplicate rows — within a batch AND across batch
 boundaries (the case that requires keyed state to survive between
@@ -18,8 +18,6 @@ it are consciously out of dedup scope.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,7 +26,7 @@ from realestatedeals_spark.io.sources import load_events
 from realestatedeals_spark.plans.registry import register
 from realestatedeals_spark.session import apply_session_conf
 from realestatedeals_spark.streaming.windows import stream_dedup
-from realestatedeals_spark.streaming.replay import time_tiles, write_epoch_dirs
+from realestatedeals_spark.streaming.replay import run_replay, time_tiles
 
 _C5_ORACLE = """
 SELECT event_type, CAST(count(*) AS BIGINT) AS n
@@ -40,52 +38,25 @@ FROM events GROUP BY event_type
 def c5_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay events as 3 micro-batches with planted duplicates; the
     watermarked streaming dedup must emit each event exactly once."""
-    from pyspark.sql import Window as W
-
     apply_session_conf(spark)
     ev = load_events(spark, sf_dir).select("event_id", "ts", "user_id", "event_type", "value")
     # three time-ordered tiles (deterministic total order); at scale this is
     # a range partition by time — exactly how a log replay arrives anyway
     tiles = time_tiles(ev, 3)  # exact ntile membership, no unpartitioned window
 
-    work = tempfile.mkdtemp(prefix="stream_dedup_bench_")
-    try:
-        in_dir = os.path.join(work, "in")
-        os.makedirs(in_dir)
-        batches = []
-        for i in (1, 2, 3):
-            tile = tiles[i - 1]
-            # planted duplicates: every 13th event repeats within its own
-            # batch; every 7th event of the PREVIOUS batch repeats here, so
-            # cross-batch state is what removes it
-            dups_within = tile.filter(F.col("event_id") % 13 == 0)
-            batch = tile.unionAll(dups_within)
-            if i > 1:
-                prev = tiles[i - 2]
-                batch = batch.unionAll(prev.filter(F.col("event_id") % 7 == 0))
-            batches.append(batch)
-        write_epoch_dirs(in_dir, batches, start=1)
+    # planted duplicates: every 13th event repeats within its own batch;
+    # every 7th event of the PREVIOUS batch repeats in the next, so
+    # cross-batch state is what removes it
+    batches = [t.unionAll(t.filter(F.col("event_id") % 13 == 0)) for t in tiles]
+    for i in (1, 2):
+        batches[i] = batches[i].unionAll(tiles[i - 1].filter(F.col("event_id") % 7 == 0))
 
-        stream = (
-            spark.readStream.schema(
-                "event_id bigint, ts timestamp, user_id bigint, event_type string, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir + "/*")
-        )
+    def write(stream, work):
         deduped = stream_dedup(stream, keys=["event_id"], watermark="3650 days")
-        out_dir = os.path.join(work, "out")
-        q = (
-            deduped.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        return deduped.writeStream.format("parquet").option("path", os.path.join(work, "out"))
 
-        emitted = spark.read.parquet(out_dir)
-        result = emitted.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-        return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    def read(work):
+        emitted = spark.read.parquet(os.path.join(work, "out"))
+        return emitted.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+
+    return run_replay(spark, [batches], write, read)

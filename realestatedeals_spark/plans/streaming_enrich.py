@@ -18,8 +18,6 @@ the comparison is exact.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,7 +25,7 @@ from pyspark.sql import functions as F
 from realestatedeals_spark.io.sources import load_events, load_table
 from realestatedeals_spark.plans.registry import register
 from realestatedeals_spark.session import apply_session_conf
-from realestatedeals_spark.streaming.replay import time_tiles, write_epoch_dirs
+from realestatedeals_spark.streaming.replay import run_replay, time_tiles
 
 _C8_ORACLE = """
 SELECT n.n_name AS nation, e.event_type,
@@ -42,8 +40,6 @@ GROUP BY n.n_name, e.event_type
 
 @register("c8_stream_static_enrich", oracle=_C8_ORACLE, tags=("C8", "streaming", "join"))
 def c8_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     apply_session_conf(spark)
     ev = load_events(spark, sf_dir).select(
         "event_id",
@@ -62,46 +58,24 @@ def c8_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tiles = time_tiles(ev, 3)  # exact ntile membership, no unpartitioned window
 
-    work = tempfile.mkdtemp(prefix="enrich_stream_")
-    try:
-        in_dir = os.path.join(work, "in")
-        os.makedirs(in_dir)
-        write_epoch_dirs(
-            in_dir,
-            tiles,
-            start=1,
-        )
-
-        stream = (
-            spark.readStream.schema(
-                "event_id bigint, ts timestamp, user_id bigint, "
-                "event_type string, value_micros bigint"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir + "/*")
-        )
+    def write(stream, work):
         # the stream-static join IS the streaming plan — the dimension is a
         # plain batch DataFrame re-broadcast per micro-batch
         enriched = stream.join(F.broadcast(dim), "user_id", "inner")
-        out_dir = os.path.join(work, "out")
-        q = (
+        return (
             enriched.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
+            .option("path", os.path.join(work, "out"))
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
 
-        result = (
-            spark.read.parquet(out_dir)
+    def read(work):
+        return (
+            spark.read.parquet(os.path.join(work, "out"))
             .groupBy("nation", "event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
                 F.sum("value_micros").alias("total_micros"),
             )
         )
-        return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return run_replay(spark, [tiles], write, read)

@@ -11,7 +11,7 @@ regardless of corpus size, and a replayed contribution can never inflate it
 (max is a no-op on repeats — the sketch family's native at-least-once
 tolerance, on top of the exactly-once epoch skip).
 
-After the availableNow replay the state (plus the merged '__global__'
+After the replay the state (plus the merged '__global__'
 rollup computed from it) must hash-match the BATCH query's oracle
 bit-for-bit. This is the 100 TB profiling shape: documents stream in, the
 distinct-count sketch for every source is always current, and any rollup
@@ -22,8 +22,6 @@ never a re-scan.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,7 +31,7 @@ from realestatedeals_spark.io.sources import load_table
 from realestatedeals_spark.plans.llm_profile import _X6_HLL_ARITH_ORACLE
 from realestatedeals_spark.plans.registry import register
 from realestatedeals_spark.session import apply_session_conf
-from realestatedeals_spark.streaming.replay import write_epoch_dirs
+from realestatedeals_spark.streaming.replay import run_replay
 
 
 def apply_hll_batch(cat: Catalog, batch_df: DataFrame, epoch_id: int) -> bool:
@@ -77,40 +75,21 @@ def c18_stream_hll_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     apply_session_conf(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
 
-    work = tempfile.mkdtemp(prefix="stream_hll_")
-    try:
-        in_dir = os.path.join(work, "in")
-        os.makedirs(in_dir)
-        # pmod, not %: Java remainder is negative for negative ids, which
-        # would drop such rows from EVERY batch (exactly-one-batch coverage
-        # is what the stream-vs-batch oracle match relies on).
-        write_epoch_dirs(
-            in_dir,
-            [docs.filter(F.pmod(F.col("doc_id"), 3) == i) for i in (0, 1, 2)],
-        )
-
+    def write(stream, work):
         cat = Catalog(spark, os.path.join(work, "cat"))
-        stream = (
-            spark.readStream.schema("doc_id bigint, source string, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir + "/*")
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda bdf, eid: apply_hll_batch(cat, bdf, eid)
-            )
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        state = cat.read("registers")
+        return stream.writeStream.foreachBatch(lambda bdf, eid: apply_hll_batch(cat, bdf, eid))
+
+    def read(work):
+        state = Catalog(spark, os.path.join(work, "cat")).read("registers")
         merged = (
             state.groupBy("bucket")
             .agg(F.max("register").alias("register"))
             .select(F.lit("__global__").alias("source"), "bucket", "register")
         )
-        out = state.unionByName(merged)
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return state.unionByName(merged)
+
+    # pmod, not %: Java remainder is negative for negative ids, which would
+    # drop such rows from EVERY batch (exactly-one-batch coverage is what
+    # the stream-vs-batch oracle match relies on).
+    batches = [docs.filter(F.pmod(F.col("doc_id"), 3) == i) for i in (0, 1, 2)]
+    return run_replay(spark, [batches], write, read)

@@ -42,8 +42,6 @@ refresh done as O(changes) per cycle with deletes/updates handled.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,7 +51,7 @@ from realestatedeals_spark.io.sources import load_table
 from realestatedeals_spark.plans.mor_delete_plan import _CDF_JOIN_VIEW_ORACLE
 from realestatedeals_spark.plans.registry import register
 from realestatedeals_spark.session import apply_session_conf
-from realestatedeals_spark.streaming.replay import write_epoch_dirs
+from realestatedeals_spark.streaming.replay import run_replay
 from realestatedeals_spark.util import free_local_checkpoint
 
 _SCHEMA = (
@@ -230,32 +228,19 @@ def c12_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    work = tempfile.mkdtemp(prefix="stream_join_view_")
-    try:
-        in_dir = os.path.join(work, "in")
-        os.makedirs(in_dir)
-        write_epoch_dirs(in_dir, _signed_epochs(orders, li))
+
+    def write(stream, work):
+        # the fixture write (inside run_replay) was li's last consumer
         free_local_checkpoint(li)
-
-        stream = (
-            spark.readStream.schema(_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir + "/*")
-        )
         view = _JoinView(spark, os.path.join(work, "state"))
-        q = (
-            stream.writeStream.foreachBatch(view.foreach_batch)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        return stream.writeStream.foreachBatch(view.foreach_batch)
 
-        final = view.current()
-        assert final is not None, "stream produced no batches"
-        out = final.filter(F.col("n_items") > 0).select(
+    def read(work):
+        final = _JoinView(spark, os.path.join(work, "state")).current()
+        if final is None:
+            raise RuntimeError("stream produced no batches")
+        return final.filter(F.col("n_items") > 0).select(
             F.col("custkey").alias("o_custkey"), "n_items", "rev_micros"
         )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return run_replay(spark, [_signed_epochs(orders, li)], write, read)

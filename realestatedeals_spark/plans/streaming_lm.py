@@ -29,8 +29,6 @@ from __future__ import annotations
 
 import os
 import re
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,7 +44,7 @@ from realestatedeals_spark.plans.llm_lm import (
 )
 from realestatedeals_spark.plans.registry import register
 from realestatedeals_spark.session import apply_session_conf
-from realestatedeals_spark.streaming.replay import write_epoch_dirs
+from realestatedeals_spark.streaming.replay import run_replay
 
 
 def _batch_counts(batch_df: DataFrame):
@@ -68,6 +66,14 @@ def _batch_counts(batch_df: DataFrame):
         .agg(F.count(F.lit(1)).alias("c_w"))
     )
     return tri, big, uni
+
+
+def _thirds(docs: DataFrame, r: int) -> list[DataFrame]:
+    """Split one parity half of the corpus (``doc_id`` ≡ r mod 2) into three
+    batches. pmod, not %: Java remainder is negative for negative ids, which
+    would drop such rows from EVERY batch (exactly-one-batch coverage is what
+    the stream-vs-batch oracle match relies on)."""
+    return [docs.filter(F.pmod(F.col("doc_id"), 6) == 2 * i + r) for i in (0, 1, 2)]
 
 
 def apply_lm_batch(cat: Catalog, batch_df: DataFrame, epoch_id: int) -> bool:
@@ -143,40 +149,17 @@ def c15_stream_lm_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
     )
 
-    work = tempfile.mkdtemp(prefix="stream_lm_")
-    try:
-        in_dir = os.path.join(work, "in")
-        os.makedirs(in_dir)
-        # pmod, not %: Java remainder is negative for negative ids, which
-        # would drop such rows from EVERY batch (exactly-one-batch coverage
-        # is what the stream-vs-batch oracle match relies on).
-        write_epoch_dirs(
-            in_dir,
-            [docs.filter(F.pmod(F.col("doc_id"), 6) == 2 * i) for i in (0, 1, 2)],
-        )
-
+    def write(stream, work):
         cat = Catalog(spark, os.path.join(work, "cat"))
-        stream = (
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir + "/*")
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda bdf, eid: apply_lm_batch(cat, bdf, eid)
-            )
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # the streamed model must be indistinguishable from the batch one
-        return spark.createDataFrame(
-            model_head(cat).collect(),
-            "u string, v string, w string, c_uvw bigint, c_uv bigint, p_micros bigint",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return stream.writeStream.foreachBatch(lambda bdf, eid: apply_lm_batch(cat, bdf, eid))
+
+    # the streamed model must be indistinguishable from the batch one
+    return run_replay(
+        spark,
+        [_thirds(docs, 0)],
+        write,
+        lambda work: model_head(Catalog(spark, os.path.join(work, "cat"))),
+    )
 
 
 _SCORES_DELTA_RE = re.compile(r"scores_d\d+")
@@ -275,39 +258,25 @@ def c16_stream_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
     )
 
-    work = tempfile.mkdtemp(prefix="stream_lm_score_")
-    try:
-        in_dir = os.path.join(work, "in")
-        os.makedirs(in_dir)
-        # The cache fill (one corpus scan + grouping-sets aggregate) and the
-        # replay-fixture write are independent jobs — overlap them from a
-        # 2-thread pool (guide §2.6) instead of paying them back-to-back.
-        # pmod, not %: Java remainder is negative for negative ids, which
-        # would drop such rows from EVERY batch (exactly-one-batch coverage
-        # is what the stream-vs-batch oracle match relies on).
-        from concurrent.futures import ThreadPoolExecutor
+    from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            warm = pool.submit(agg.count)  # materializes the full cache
-            fixt = pool.submit(
-                write_epoch_dirs,
-                in_dir,
-                [held.filter(F.pmod(F.col("doc_id"), 6) == 2 * i + 1) for i in (0, 1, 2)],
-            )
-            fixt.result()
-            warm.result()
+    lookup = None
+
+    def write(stream, work):
+        nonlocal lookup
+        warm.result()
         # The model total is ONE row; resolving it to a literal here (off
         # the warmed cache) removes the per-epoch AQE sub-job that
         # re-aggregated it inside every foreachBatch scoring job. Same
         # value, same LongType, bit-identical arithmetic downstream.
-        from realestatedeals_spark.util import free_local_checkpoint, inline_frame
+        from realestatedeals_spark.util import inline_frame
 
         tri, big, uni, total = model
         n_total = total.collect()[0][0]
         total_lit = inline_frame(spark, ["n_total"], [(n_total,)]).select(
             F.col("n_total").cast("long").alias("n_total")  # match sum()'s type
         )
-        model = (tri, big, uni, total_lit)
+        scored_model = (tri, big, uni, total_lit)
         # The model is scored against THREE times (one scoring job per
         # epoch); materializing the three count tables as one string-keyed
         # lookup (ngram_count_lookup) makes every epoch's five count probes
@@ -316,35 +285,35 @@ def c16_stream_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per-epoch execute 0.56 → 0.27 s measured, rowsets identical.
         from realestatedeals_spark.plans.llm_lm import ngram_count_lookup
 
-        lookup = ngram_count_lookup(model).localCheckpoint(eager=True)
-
+        lookup = ngram_count_lookup(scored_model).localCheckpoint(eager=True)
         cat = Catalog(spark, os.path.join(work, "cat"))
-        stream = (
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir + "/*")
+        return stream.writeStream.foreachBatch(
+            lambda bdf, eid: apply_score_delta_batch(cat, bdf, eid, scored_model, lookup)
         )
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda bdf, eid: apply_score_delta_batch(cat, bdf, eid, model, lookup)
-            )
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+
+    def read(work):
         # every consumer of the lookup (the per-epoch scoring jobs) has
         # materialized into committed delta files; free its blocks before
         # compaction (which reads only the deltas).
+        from realestatedeals_spark.util import free_local_checkpoint
+
         free_local_checkpoint(lookup)
+        cat = Catalog(spark, os.path.join(work, "cat"))
         compact_scores(cat)
-        assert not [n for n in cat.pins() if _SCORES_DELTA_RE.fullmatch(n)]
-        out = cat.read("scores")
-        return spark.createDataFrame(out.collect(), out.schema)
+        cat.require_retired(_SCORES_DELTA_RE)
+        return cat.read("scores")
+
+    # The cache fill (one corpus scan + grouping-sets aggregate) and the
+    # replay-fixture write are independent jobs: the fill starts before
+    # run_replay, whose first step is the fixture write, and the writer
+    # callback joins the fill before it builds the lookup (guide §2.6) —
+    # the two overlap instead of running back-to-back.
+    try:
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            warm = pool.submit(agg.count)  # materializes the full cache
+            return run_replay(spark, [_thirds(held, 1)], write, read)
     finally:
         agg.unpersist()
-        shutil.rmtree(work, ignore_errors=True)
-
 
 
 # -- O(batch) delta fold + transactional compaction (c15's production twin) --
@@ -447,38 +416,16 @@ def c15b_stream_lm_delta_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
     )
 
-    work = tempfile.mkdtemp(prefix="stream_lm_delta_")
-    try:
-        in_dir = os.path.join(work, "in")
-        os.makedirs(in_dir)
-        # pmod, not %: Java remainder is negative for negative ids, which
-        # would drop such rows from EVERY batch (exactly-one-batch coverage
-        # is what the stream-vs-batch oracle match relies on).
-        write_epoch_dirs(
-            in_dir,
-            [docs.filter(F.pmod(F.col("doc_id"), 6) == 2 * i) for i in (0, 1, 2)],
+    def write(stream, work):
+        cat = Catalog(spark, os.path.join(work, "cat"))
+        return stream.writeStream.foreachBatch(
+            lambda bdf, eid: apply_lm_delta_batch(cat, bdf, eid)
         )
 
+    def read(work):
         cat = Catalog(spark, os.path.join(work, "cat"))
-        stream = (
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir + "/*")
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda bdf, eid: apply_lm_delta_batch(cat, bdf, eid)
-            )
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         compact_lm(cat)
-        assert not [n for n in cat.pins() if _DELTA_RE.fullmatch(n)]  # retired
-        return spark.createDataFrame(
-            model_head(cat).collect(),
-            "u string, v string, w string, c_uvw bigint, c_uv bigint, p_micros bigint",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        cat.require_retired(_DELTA_RE)
+        return model_head(cat)
+
+    return run_replay(spark, [_thirds(docs, 0)], write, read)

@@ -20,8 +20,6 @@ join against the pinned snapshot.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,7 +29,7 @@ from realestatedeals_spark.io.sources import load_table
 from realestatedeals_spark.plans.multimodal import _X5_AUDIO_FP_ORACLE
 from realestatedeals_spark.plans.registry import register
 from realestatedeals_spark.session import apply_session_conf
-from realestatedeals_spark.streaming.replay import write_epoch_dirs
+from realestatedeals_spark.streaming.replay import run_replay
 
 
 def _batch_prints(batch_df: DataFrame) -> DataFrame:
@@ -106,34 +104,16 @@ def c17_stream_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     apply_session_conf(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    work = tempfile.mkdtemp(prefix="stream_media_")
-    try:
-        in_dir = os.path.join(work, "in")
-        os.makedirs(in_dir)
-        # pmod, not %: Java remainder is negative for negative ids, which
-        # would drop such rows from EVERY batch (exactly-one-batch coverage
-        # is what the stream-vs-batch oracle match relies on).
-        write_epoch_dirs(
-            in_dir,
-            [docs.filter(F.pmod(F.col("doc_id"), 3) == i) for i in (0, 1, 2)],
-        )
-
+    def write(stream, work):
         cat = Catalog(spark, os.path.join(work, "cat"))
-        stream = (
-            spark.readStream.schema("doc_id bigint")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir + "/*")
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda bdf, eid: apply_media_batch(cat, bdf, eid)
-            )
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = cat.read("prints")
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return stream.writeStream.foreachBatch(lambda bdf, eid: apply_media_batch(cat, bdf, eid))
+
+    # pmod, not %: Java remainder is negative for negative ids, which would
+    # drop such rows from EVERY batch (exactly-one-batch coverage is what
+    # the stream-vs-batch oracle match relies on).
+    return run_replay(
+        spark,
+        [[docs.filter(F.pmod(F.col("doc_id"), 3) == i) for i in (0, 1, 2)]],
+        write,
+        lambda work: Catalog(spark, os.path.join(work, "cat")).read("prints"),
+    )

@@ -34,8 +34,6 @@ as durable, versioned, incrementally-maintained warehouse state.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,7 +43,7 @@ from realestatedeals_spark.io.sources import load_events
 from realestatedeals_spark.plans.events import _SCD2_ORACLE, _TS_FMT_SPARK
 from realestatedeals_spark.plans.registry import register
 from realestatedeals_spark.session import apply_session_conf
-from realestatedeals_spark.streaming.replay import time_tiles, write_epoch_dirs
+from realestatedeals_spark.streaming.replay import run_replay, time_tiles
 
 _OPENS_SCHEMA = (
     "user_id bigint, event_type string, valid_from timestamp, "
@@ -165,42 +163,24 @@ def c10_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     MERGE each into versioned warehouse state; return the maintained
     dimension (closed log ∪ opens), which must hash-match the one-pass
     batch rebuild's oracle exactly."""
-    from pyspark.sql import Window as W
-
     apply_session_conf(spark)
     ev = load_events(spark, sf_dir).select("user_id", "event_type", "ts", "event_id")
     tiles = time_tiles(ev, 3)  # exact ntile membership, no unpartitioned window
 
-    work = tempfile.mkdtemp(prefix="scd2_stream_")
-    try:
-        in_dir = os.path.join(work, "in")
-        os.makedirs(in_dir)
-        write_epoch_dirs(
-            in_dir,
-            tiles,
-            start=1,
+    def tables(work):
+        return (
+            VersionedTable(spark, os.path.join(work, "closed")),
+            VersionedTable(spark, os.path.join(work, "opens")),
         )
 
-        closed_t = VersionedTable(spark, os.path.join(work, "closed"))
-        opens_t = VersionedTable(spark, os.path.join(work, "opens"))
-
-        def step(batch_df: DataFrame, batch_id: int) -> None:
-            scd2_merge_step(spark, batch_df, batch_id, closed_t, opens_t)
-
-
-        stream = (
-            spark.readStream.schema("user_id bigint, event_type string, ts timestamp, event_id bigint")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir + "/*")
+    def write(stream, work):
+        closed_t, opens_t = tables(work)
+        return stream.writeStream.foreachBatch(
+            lambda bdf, eid: scd2_merge_step(spark, bdf, eid, closed_t, opens_t)
         )
-        q = (
-            stream.writeStream.foreachBatch(step)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
+    def read(work):
+        closed_t, opens_t = tables(work)
         closed = closed_t.read().select(
             "user_id",
             "event_type",
@@ -217,7 +197,6 @@ def c10_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "version",
             F.lit(True).alias("is_current"),
         )
-        # localCheckpoint detaches the result from the temp dir before cleanup
-        return closed.unionByName(opens).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return closed.unionByName(opens)
+
+    return run_replay(spark, [tiles], write, read)

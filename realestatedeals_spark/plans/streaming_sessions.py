@@ -20,8 +20,6 @@ sessions only, and the watermark both bounds state and defines emission.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,7 +27,7 @@ from pyspark.sql import functions as F
 from realestatedeals_spark.io.sources import load_events
 from realestatedeals_spark.plans.registry import register
 from realestatedeals_spark.session import apply_session_conf
-from realestatedeals_spark.streaming.replay import time_tiles, write_epoch_dirs
+from realestatedeals_spark.streaming.replay import run_replay, time_tiles
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 _TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S.%f"
@@ -58,55 +56,33 @@ GROUP BY user_id, session_id
 
 @register("c7_streaming_sessions", oracle=_C7_ORACLE, tags=("C7", "streaming", "session"))
 def c7_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     apply_session_conf(spark)
     ev = load_events(spark, sf_dir).select("event_id", "ts", "user_id")
     tiles = time_tiles(ev, 3)  # exact ntile membership, no unpartitioned window
     bounds = ev.agg(F.max("ts").alias("mx")).first()
 
-    work = tempfile.mkdtemp(prefix="sessions_stream_")
-    try:
-        in_dir = os.path.join(work, "in")
-        os.makedirs(in_dir)
-        write_epoch_dirs(
-            in_dir,
-            tiles,
-            start=1,
-        )
-        # sentinel: a lone far-future event whose only job is to advance the
-        # watermark past every real session's end (its own session never
-        # emits — no event ever follows it)
-        sentinel = spark.createDataFrame(
-            [(-1, bounds["mx"], -1)], "event_id bigint, ts timestamp, user_id bigint"
-        ).select(
-            "event_id", (F.col("ts") + F.expr("interval 2 hours")).alias("ts"), "user_id"
-        )
-        write_epoch_dirs(in_dir, [sentinel], start=4)
+    # sentinel, replayed last: a lone far-future event whose only job is to
+    # advance the watermark past every real session's end (its own session
+    # never emits — no event ever follows it)
+    sentinel = spark.createDataFrame(
+        [(-1, bounds["mx"], -1)], "event_id bigint, ts timestamp, user_id bigint"
+    ).select("event_id", (F.col("ts") + F.expr("interval 2 hours")).alias("ts"), "user_id")
 
-        stream = (
-            spark.readStream.schema("event_id bigint, ts timestamp, user_id bigint")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir + "/*")
-        )
+    def write(stream, work):
         sessions = (
             stream.withWatermark("ts", "10 minutes")
             .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
             .agg(F.count(F.lit(1)).alias("n_events"))
         )
-        out_dir = os.path.join(work, "out")
-        q = (
+        return (
             sessions.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
+            .option("path", os.path.join(work, "out"))
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
 
-        emitted = spark.read.parquet(out_dir)
-        result = emitted.filter(F.col("user_id") >= 0).select(
+    def read(work):
+        emitted = spark.read.parquet(os.path.join(work, "out"))
+        return emitted.filter(F.col("user_id") >= 0).select(
             "user_id",
             F.date_format("w.start", _TS_FMT_SPARK).alias("session_start"),
             # session_window end = last event + gap; undo the pad to report
@@ -116,6 +92,5 @@ def c7_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("session_end"),
             "n_events",
         )
-        return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return run_replay(spark, [tiles + [sentinel]], write, read)

@@ -1,7 +1,7 @@
 """Arbitrary keyed streaming state (C4) as a registered, oracle-checked query.
 
 ``running_user_stats`` (streaming/stateful.py — ``applyInPandasWithState``)
-was previously pytest-only; this registers a full availableNow replay: events
+was previously pytest-only; this registers a full replay (``run_replay``): events
 arrive as three time-ordered micro-batches, per-user (count, sum, max) state
 lives inside Spark's state store across batches, and every micro-batch's
 updated rows land in a parquet sink tagged with the batch id. The final
@@ -17,17 +17,35 @@ hash-exact, not tolerance-based.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from realestatedeals_spark.io.sources import load_events
 from realestatedeals_spark.plans.registry import register
 from realestatedeals_spark.session import apply_session_conf
 from realestatedeals_spark.streaming.stateful import running_user_stats
-from realestatedeals_spark.streaming.replay import time_tiles, write_epoch_dirs
+from realestatedeals_spark.streaming.replay import run_replay, time_tiles
+
+def _batch_id_sink(out_dir: str):
+    """foreachBatch sink: append each epoch's update rows tagged with the
+    batch id, so the read can keep each key's last emission."""
+    return lambda bdf, eid: bdf.withColumn("batch_id", F.lit(eid)).write.mode(
+        "append"
+    ).parquet(out_dir)
+
+
+def _last_emission(spark: SparkSession, work: str, cols: tuple[str, ...]) -> DataFrame:
+    """Each user's row from the last batch that emitted it."""
+    last = W.partitionBy("user_id").orderBy(F.col("batch_id").desc())
+    return (
+        spark.read.parquet(os.path.join(work, "out"))
+        .withColumn("rn", F.row_number().over(last))
+        .filter(F.col("rn") == 1)
+        .select(*cols)
+    )
+
 
 _C4_ORACLE = """
 SELECT user_id,
@@ -42,8 +60,6 @@ FROM events GROUP BY user_id
 def c4_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay events as 3 micro-batches through applyInPandasWithState; the
     per-user state after the final batch must equal the all-data groupBy."""
-    from pyspark.sql import Window as W
-
     apply_session_conf(spark)
     ev = load_events(spark, sf_dir).select(
         "event_id",
@@ -53,50 +69,21 @@ def c4_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tiles = time_tiles(ev, 3)  # exact ntile membership, no unpartitioned window
 
-    work = tempfile.mkdtemp(prefix="stateful_bench_")
-    try:
-        in_dir = os.path.join(work, "in")
-        os.makedirs(in_dir)
-        write_epoch_dirs(
-            in_dir,
-            tiles,
-            start=1,
-        )
-
-        stream = (
-            spark.readStream.schema(
-                "event_id bigint, ts timestamp, user_id bigint, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir + "/*")
-        )
-        out_dir = os.path.join(work, "out")
-
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
-                "append"
-            ).parquet(out_dir)
-
-        q = (
+    def write(stream, work):
+        return (
             running_user_stats(stream)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
+            .writeStream.foreachBatch(_batch_id_sink(os.path.join(work, "out")))
             .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
 
-        emitted = spark.read.parquet(out_dir)
-        last = W.partitionBy("user_id").orderBy(F.col("batch_id").desc())
-        result = (
-            emitted.withColumn("rn", F.row_number().over(last))
-            .filter(F.col("rn") == 1)
-            .select("user_id", "n_events", "total_value", "max_value")
-        )
-        return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return run_replay(
+        spark,
+        [tiles],
+        write,
+        lambda work: _last_emission(
+            spark, work, ("user_id", "n_events", "total_value", "max_value")
+        ),
+    )
 
 
 _C4_FUNNEL_ET_ORACLE = """
@@ -135,8 +122,6 @@ def c4_funnel_event_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     over all their events and hash-matches the batch e6 stepping — the
     retraction case the ordered-arrival funnel documents as out of scope.
     """
-    from pyspark.sql import Window as W
-
     from realestatedeals_spark.operators.ranking import ntile_exact
     from realestatedeals_spark.streaming.stateful import funnel_progress_event_time
 
@@ -159,44 +144,16 @@ def c4_funnel_event_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).first()
     delay_us = (bounds["hi"] - bounds["lo"]) // 2  # 2 quartile widths of slack
 
-    work = tempfile.mkdtemp(prefix="funnel_et_bench_")
-    try:
-        in_dir = os.path.join(work, "in")
-        os.makedirs(in_dir)
-        write_epoch_dirs(
-            in_dir,
-            [tiled.filter(F.col("b") == i).drop("b") for i in range(4)],
-        )
-
-        stream = (
-            spark.readStream.schema("user_id bigint, ts timestamp, event_type string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir + "/*")
-        )
-        out_dir = os.path.join(work, "out")
-
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
-                "append"
-            ).parquet(out_dir)
-
-        q2 = (
+    def write(stream, work):
+        return (
             funnel_progress_event_time(stream, delay=f"{delay_us} microseconds")
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
+            .writeStream.foreachBatch(_batch_id_sink(os.path.join(work, "out")))
             .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
         )
-        q2.awaitTermination()
 
-        emitted = spark.read.parquet(out_dir)
-        last = W.partitionBy("user_id").orderBy(F.col("batch_id").desc())
-        result = (
-            emitted.withColumn("rn", F.row_number().over(last))
-            .filter(F.col("rn") == 1)
-            .select("user_id", "s_us", "c_us", "p_us", "stage")
-        )
-        return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return run_replay(
+        spark,
+        [[tiled.filter(F.col("b") == i).drop("b") for i in range(4)]],
+        write,
+        lambda work: _last_emission(spark, work, ("user_id", "s_us", "c_us", "p_us", "stage")),
+    )

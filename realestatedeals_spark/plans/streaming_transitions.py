@@ -5,7 +5,7 @@ A stateless per-batch LEAD misses exactly one transition per user per
 micro-batch boundary; ``transition_deltas`` (streaming/stateful.py) keeps
 each user's last event type in the state store so the boundary pairs are
 counted once. The replay drives three time-tiled micro-batches through
-availableNow, the emitted deltas groupBy-sum into counts, and the final
+``run_replay``, the emitted deltas groupBy-sum into counts, and the final
 row-normalization matches the batch e30 oracle hash-exactly — proof the
 incremental formulation converges to the batch answer.
 
@@ -16,8 +16,6 @@ mergeable, so the downstream matrix is an incremental view, never a rescan.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,7 +25,7 @@ from realestatedeals_spark.plans.events import _E30_TRANSITIONS_ORACLE
 from realestatedeals_spark.plans.registry import register
 from realestatedeals_spark.session import apply_session_conf
 from realestatedeals_spark.streaming.stateful import transition_deltas
-from realestatedeals_spark.streaming.replay import time_tiles, write_epoch_dirs
+from realestatedeals_spark.streaming.replay import run_replay, time_tiles
 
 
 @register(
@@ -45,42 +43,21 @@ def c13_stream_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_events(spark, sf_dir).select("event_id", "ts", "user_id", "event_type")
     tiles = time_tiles(ev, 3)  # exact ntile membership, no unpartitioned window
 
-    work = tempfile.mkdtemp(prefix="transitions_stream_")
-    try:
-        in_dir = os.path.join(work, "in")
-        os.makedirs(in_dir)
-        write_epoch_dirs(
-            in_dir,
-            tiles,
-            start=1,
-        )
-
-        stream = (
-            spark.readStream.schema(
-                "event_id bigint, ts timestamp, user_id bigint, event_type string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir + "/*")
-        )
+    def write(stream, work):
         out_dir = os.path.join(work, "out")
-
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("append").parquet(out_dir)
-
-        q = (
+        return (
             transition_deltas(stream)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
+            .writeStream.foreachBatch(
+                lambda bdf, eid: bdf.write.mode("append").parquet(out_dir)
+            )
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
 
-        deltas = spark.read.parquet(out_dir)
+    def read(work):
+        deltas = spark.read.parquet(os.path.join(work, "out"))
         c = deltas.groupBy("from_type", "to_type").agg(F.sum("n").alias("n"))
         wt = W.partitionBy("from_type")
-        result = c.select(
+        return c.select(
             "from_type",
             "to_type",
             "n",
@@ -88,6 +65,5 @@ def c13_stream_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "prob"
             ),
         )
-        return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return run_replay(spark, [tiles], write, read)

@@ -4,7 +4,7 @@ Generalizes the reference's cross-cycle state snapshot (main.py:97,135): an
 unbounded event stream maintains a per-(user_id, event_type) aggregate view
 where each micro-batch costs O(|batch keys|) — partial aggregate + MERGE —
 never a recompute over history. The replay drives three time-ordered file
-micro-batches through ``foreachBatch`` (availableNow); the view after the
+micro-batches through ``foreachBatch`` (``run_replay``); the view after the
 final batch must hash-match a from-scratch groupBy over all events (the
 DuckDB oracle). Doubles enter the stream as floor-micros so the maintained
 sums are associative and the comparison is exact, not tolerance-based.
@@ -13,8 +13,6 @@ sums are associative and the comparison is exact, not tolerance-based.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,7 +21,7 @@ from realestatedeals_spark.io.sources import load_events
 from realestatedeals_spark.plans.registry import register
 from realestatedeals_spark.session import apply_session_conf
 from realestatedeals_spark.streaming.agg_view import ParquetAggView
-from realestatedeals_spark.streaming.replay import time_tiles, write_epoch_dirs
+from realestatedeals_spark.streaming.replay import run_replay, time_tiles
 
 _C6_ORACLE = """
 SELECT user_id, event_type,
@@ -40,8 +38,6 @@ GROUP BY user_id, event_type
 def c6_incremental_agg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay events as 3 micro-batches; MERGE each batch's partial aggregate
     into the persistent view; return the final view (minus bookkeeping)."""
-    from pyspark.sql import Window as W
-
     apply_session_conf(spark)
     ev = load_events(spark, sf_dir).select(
         "event_id",
@@ -52,38 +48,16 @@ def c6_incremental_agg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tiles = time_tiles(ev, 3)  # exact ntile membership, no unpartitioned window
 
-    work = tempfile.mkdtemp(prefix="agg_view_")
-    try:
-        in_dir = os.path.join(work, "in")
-        os.makedirs(in_dir)
-        write_epoch_dirs(
-            in_dir,
-            tiles,
-            start=1,
-        )
-
-        stream = (
-            spark.readStream.schema(
-                "event_id bigint, ts timestamp, user_id bigint, "
-                "event_type string, value_micros bigint"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir + "/*")
-        )
+    def write(stream, work):
         view = ParquetAggView(spark, os.path.join(work, "view"))
-        q = (
-            stream.writeStream.foreachBatch(view.foreach_batch)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        return stream.writeStream.foreachBatch(view.foreach_batch)
 
-        final = view.current()
-        assert final is not None, "stream produced no batches"
-        result = final.select(
+    def read(work):
+        final = ParquetAggView(spark, os.path.join(work, "view")).current()
+        if final is None:
+            raise RuntimeError("stream produced no batches")
+        return final.select(
             "user_id", "event_type", "n_events", "sum_micros", "min_micros", "max_micros"
         )
-        return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return run_replay(spark, [tiles], write, read)

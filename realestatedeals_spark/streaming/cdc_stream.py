@@ -211,37 +211,3 @@ def process_cdc_batch(
         state.publish()
     return emissions
 
-
-def start_cdc_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    state_dir: str,
-    emit_dir: str,
-    checkpoint_dir: str,
-    key: str = "mls",
-    price: str = "price",
-    trigger_available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
-    """Wire the poll loop: file-source micro-batches → foreachBatch CDC.
-
-    Each dropped file set = one scrape cycle (the reference's 30-minute poll,
-    hunter.py:16, becomes ``trigger(processingTime=...)`` in production;
-    ``availableNow`` drains pending cycles for tests/backfills).
-    ``max_files_per_trigger=1`` with one file per cycle replays a backlog of
-    cycles as distinct micro-batches in file-mtime order.
-    """
-    state = CdcState(spark, state_dir, key, price)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(input_dir)
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        process_cdc_batch(batch_df, state, emit_dir, epoch_id=epoch_id)
-
-    writer = stream.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

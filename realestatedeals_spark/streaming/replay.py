@@ -1,42 +1,56 @@
-"""Shared micro-batch replay harness for the streaming twins.
+"""The one driver behind every streaming query in the registry.
 
-Every streaming query in the registry replays a deterministic sequence of
-micro-batches through a real Structured Streaming query
-(``maxFilesPerTrigger=1`` + ``availableNow``), which needs the same
-fixture choreography everywhere: write each batch as ONE parquet file in
-its own ``b{i}`` directory, then stamp strictly increasing mtimes so the
-file-source picks them up in order. This module is the one home for that
-choreography.
+Each streaming twin replays a deterministic sequence of micro-batches
+through a real Structured Streaming query. ``run_replay`` owns all of that
+machinery, so a driver states only what is its own: its batch frames, its
+fold or sink, and how it reads its result.
 
-The batches are written by ONE Spark job (round 12, guide §2.4): every
-batch frame is tagged with a literal batch index, the union is hash-
-partitioned on that index so each batch's rows land in exactly one task
-(⇒ exactly one data file per batch), and the job writes
-``partitionBy(_b)`` into a staging dir whose partition directories are
-then renamed into place. The previous shape — N concurrent single-file
-jobs from a thread pool — paid N job schedulings and N scan plans per
-replay fixture; at ~0.1–0.2 s of per-job machinery across a dozen
-streaming registry entries, that fixed cost was the point (round-10 and
-round-12 measurements in SCALE.md / OPTIMIZATION_r12.md).
+``run_replay(spark, phases, write, read)`` contract:
+
+- **Phases.** ``phases`` is a non-empty list of non-empty lists of batch
+  frames. Every batch is one micro-batch (one parquet file under
+  ``maxFilesPerTrigger=1``), replayed in list order, so the batch ids run
+  0..N-1 across all phases. Each phase is drained by a fresh ``start``
+  from the SAME checkpoint (``availableNow``, then ``awaitTermination``);
+  a phase's batches become visible only when its start begins. One phase
+  is the common case; a second phase replays a checkpoint restart (c3).
+  A watermark sentinel (c7, c11) is just the last batch.
+- **Fixture.** The batches of all phases are written by ONE Spark job
+  before the first start (``write_epoch_dirs``). The stream's schema is
+  the batch frames' own schema.
+- **Writer callback.** ``write(stream, work)`` turns the stream into a
+  ``DataStreamWriter``: ``foreachBatch(fold)``, or a file sink with an
+  output mode. It is called once; ``run_replay`` adds the checkpoint and
+  the trigger. Any state the fold keeps goes under the work dir ``work``
+  (the names ``fixture``, ``in`` and ``ckpt`` there are taken).
+- **Detach.** ``read(work)`` returns the result frame, which may still
+  read files under ``work``; ``run_replay`` pins it with an eager
+  ``localCheckpoint`` before cleanup, so the returned frame owns its rows.
+  The other form, ``createDataFrame(collect())``, round-trips every row
+  through the Python driver: on the ``stream_ingest`` benchmark (4 cores)
+  it took c3 and c17 from 0.13–0.16 s to 0.41–0.46 s of execute each, and
+  the pass from ~7 s to ~10 s.
+- **Cleanup.** The work dir is removed on every path. An error raised by
+  the writer callback, the fold or ``read`` propagates after cleanup.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import tempfile
+from typing import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 BASE_TS = 1_700_000_000
 STEP = 10
 
 
-def epoch_dir_name(i: int) -> str:
-    """Directory name ``write_epoch_dirs`` gives batch index ``i``. Callers
-    that hold back / replay a specific batch (c3's restart-from-checkpoint
-    phase) must derive the name here, never hard-code the b-prefix."""
+def _epoch_dir(i: int) -> str:
     return f"b{i}"
 
 
@@ -103,42 +117,35 @@ def time_tiles(
     return tiles
 
 
-def write_epoch_dirs(
-    in_dir: str,
-    batches: list[DataFrame],
-    start: int = 0,
-    base_ts: int = BASE_TS,
-    step: int = STEP,
-) -> None:
-    """Write ``batches[k]`` to ``in_dir/b{start+k}`` as a single parquet
-    file with mtime ``base_ts + (start+k)*step``. All batches are written
-    by one partitioned job (module docstring); mtimes are stamped only
-    after every write has completed, so ordering is by the stamp alone
-    (never by write completion order)."""
+def write_epoch_dirs(in_dir: str, batches: list[DataFrame]) -> None:
+    """Write ``batches[i]`` to ``in_dir/b{i}`` as a single parquet file with
+    mtime ``BASE_TS + i*STEP``, so the file source replays them in order.
+
+    ONE job writes every batch: each frame is tagged with its batch index,
+    the union is hash-partitioned on that index so a batch is exactly one
+    task's output (one data file per batch), and the ``partitionBy`` dirs
+    are renamed into place. N single-file jobs would pay N job schedulings
+    and N scan plans per replay. mtimes are stamped only after every write
+    has completed, so ordering is by the stamp alone, never by write
+    completion order."""
     os.makedirs(in_dir, exist_ok=True)
 
     def _stamp(i: int) -> None:
-        d = os.path.join(in_dir, epoch_dir_name(i))
-        t = base_ts + i * step
+        d = os.path.join(in_dir, _epoch_dir(i))
+        t = BASE_TS + i * STEP
         for fname in os.listdir(d):
             os.utime(os.path.join(d, fname), (t, t))
 
-    def _one(k: int, df: DataFrame) -> None:
-        i = start + k
-        df.coalesce(1).write.parquet(os.path.join(in_dir, epoch_dir_name(i)))
+    def _one(i: int, df: DataFrame) -> None:
+        df.coalesce(1).write.parquet(os.path.join(in_dir, _epoch_dir(i)))
         _stamp(i)
 
     if len(batches) == 1:
         _one(0, batches[0])
         return
-    # ONE job for all batches: tag each frame with its batch index (the
-    # fixture frames never carry a ``_b`` column), hash-partition on it so
-    # a batch is exactly one task's output (one data file per dir even when
-    # two indexes hash-collide into one task — the writer splits files by
-    # partition value), and rename the partition dirs into place.
     tagged = None
-    for k, df in enumerate(batches):
-        t = df.withColumn("_b", F.lit(start + k))
+    for i, df in enumerate(batches):
+        t = df.withColumn("_b", F.lit(i))  # fixture frames never carry ``_b``
         tagged = t if tagged is None else tagged.unionByName(t)
     stage = os.path.join(in_dir, ".epochs_stage")
     tagged.repartition(len(batches), "_b").write.partitionBy("_b").parquet(stage)
@@ -146,15 +153,52 @@ def write_epoch_dirs(
     for entry in os.listdir(stage):
         if entry.startswith("_b="):
             i = int(entry.split("=", 1)[1])
-            os.rename(os.path.join(stage, entry), os.path.join(in_dir, epoch_dir_name(i)))
+            os.rename(os.path.join(stage, entry), os.path.join(in_dir, _epoch_dir(i)))
             written.add(i)
     shutil.rmtree(stage, ignore_errors=True)
-    for k, df in enumerate(batches):
-        i = start + k
+    for i, df in enumerate(batches):
         if i in written:
             _stamp(i)
         else:
             # an EMPTY batch produces no partition dir in the single-job
             # write; fall back to the per-batch path so the epoch (and its
             # batch-index accounting downstream) still exists
-            _one(k, df)
+            _one(i, df)
+
+
+def run_replay(
+    spark: SparkSession,
+    phases: list[list[DataFrame]],
+    write: Callable[[DataFrame, str], DataStreamWriter],
+    read: Callable[[str], DataFrame],
+) -> DataFrame:
+    """Replay ``phases`` through one streaming query and return ``read``'s
+    frame, detached from the work dir (module docstring)."""
+    if not phases or not all(phases):
+        raise ValueError("run_replay needs at least one phase and no empty phase")
+    batches = [b for phase in phases for b in phase]
+    work = tempfile.mkdtemp(prefix="replay_")
+    try:
+        fixture, in_dir = os.path.join(work, "fixture"), os.path.join(work, "in")
+        write_epoch_dirs(fixture, batches)
+        os.makedirs(in_dir)
+        stream = (
+            spark.readStream.schema(batches[0].schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(in_dir + "/*")
+        )
+        writer = (
+            write(stream, work)
+            .option("checkpointLocation", os.path.join(work, "ckpt"))
+            .trigger(availableNow=True)
+        )
+        i = 0
+        for phase in phases:
+            for _ in phase:
+                name = _epoch_dir(i)
+                os.rename(os.path.join(fixture, name), os.path.join(in_dir, name))
+                i += 1
+            writer.start().awaitTermination()
+        return read(work).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)

@@ -8,7 +8,8 @@ import os
 
 from pyspark.sql import functions as F
 
-from realestatedeals_spark.streaming.cdc_stream import CdcState, process_cdc_batch, start_cdc_stream
+from realestatedeals_spark.streaming.cdc_stream import CdcState, process_cdc_batch
+from realestatedeals_spark.streaming.replay import run_replay
 from realestatedeals_spark.streaming.windows import session_windows, sliding_rates, tumbling_counts
 
 
@@ -39,24 +40,21 @@ def test_cdc_batches_sequence(spark, tmp_path):
     assert total == 2 + 2 + 1
 
 
-def test_cdc_stream_wiring(spark, tmp_path):
+def test_cdc_stream_wiring(spark):
     """End-to-end through an actual streaming query (file source →
-    foreachBatch), drained with availableNow."""
-    in_dir = str(tmp_path / "in")
-    os.makedirs(in_dir)
+    foreachBatch), drained with availableNow by run_replay."""
     b1 = spark.createDataFrame([("m1", 100.0), ("m2", 200.0)], ["mls", "price"])
-    b1.write.mode("append").parquet(in_dir)
 
-    q = start_cdc_stream(
-        spark,
-        in_dir,
-        schema="mls string, price double",
-        state_dir=str(tmp_path / "state"),
-        emit_dir=str(tmp_path / "emit"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
+    def write(stream, work):
+        state = CdcState(spark, os.path.join(work, "state"))
+        emit_dir = os.path.join(work, "emit")
+        return stream.writeStream.foreachBatch(
+            lambda bdf, eid: process_cdc_batch(bdf, state, emit_dir, epoch_id=eid)
+        )
+
+    emitted = run_replay(
+        spark, [[b1]], write, lambda work: spark.read.parquet(os.path.join(work, "emit"))
     )
-    q.awaitTermination(60)
-    emitted = spark.read.parquet(str(tmp_path / "emit"))
     assert emitted.filter(F.col("status") == "new_listing").count() == 2
 
 

@@ -191,6 +191,42 @@ def test_compaction_with_nothing_to_fold_raises_typed(spark, tmp_path):
         compact_lm(cat)
 
 
+def test_compaction_leaving_a_delta_pinned_raises_typed(spark, tmp_path, monkeypatch):
+    """Planted defect: a compaction whose commit retires all but its last
+    delta must fail the retirement check the c15b/c16/c19 drivers run,
+    with a typed CompactionError (a bare assert would vanish under -O)."""
+    import pytest
+
+    from realestatedeals_spark.io.catalog import CompactionError
+    from realestatedeals_spark.plans.streaming_lm import (
+        _DELTA_RE,
+        apply_lm_delta_batch,
+        compact_lm,
+    )
+
+    def delta_catalog(name):
+        cat = Catalog(spark, str(tmp_path / name))
+        for i, row in enumerate([(0, "a b c"), (2, "b c d")]):
+            assert apply_lm_delta_batch(cat, _docs(spark, [row]), i) is True
+        return cat
+
+    good = delta_catalog("good")
+    compact_lm(good)
+    good.require_retired(_DELTA_RE)  # a correct compaction passes
+
+    leaky = delta_catalog("leaky")
+    commit = Catalog.commit
+
+    def commit_keeping_last_delta(self, updates, *args, drops=None, **kwargs):
+        return commit(self, updates, *args, drops=(drops or [])[:-1], **kwargs)
+
+    monkeypatch.setattr(Catalog, "commit", commit_keeping_last_delta)
+    compact_lm(leaky)
+    monkeypatch.undo()
+    with pytest.raises(CompactionError, match="lm_d1"):
+        leaky.require_retired(_DELTA_RE)
+
+
 def test_lookup_scoring_path_rowset_identical_to_plain(spark, sf_dir):
     """r13: c16 scores every epoch through the string-keyed count lookup
     (ngram_count_lookup + score_documents(lookup=...)). Pins that the
